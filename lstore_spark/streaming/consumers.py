@@ -15,14 +15,19 @@ independent named consumers.  This module adds it, storage-side:
   mid-commit can never tear it and a restarted consumer resumes from
   the last fully-committed offset — at-least-once delivery, exactly
   like a Kafka group cursor;
-- ``poll`` reads records past the cursor through the pushdown reader,
-  so sealed segments whose trailer range lies at-or-below the cursor
-  are pruned at PLANNING time: a caught-up consumer touches O(new
-  data), never O(log);
+- ``poll`` plans its read on the driver with ``plan_segments``, so
+  sealed segments whose trailer range lies at-or-below the cursor are
+  pruned before any task runs, and reads the rest with
+  ``scan_segments`` — one Spark task per segment and no Python
+  DataSource planner calls: a caught-up consumer touches O(new data),
+  never O(log);
 - ``lag_report`` is the broker's lag relation: (grp, committed_offset,
   tail_offset, lag_offsets, lag_records).  The tail comes from sealed
   trailer stats (a manifest-grade metadata read); the record lag rides
   ONE shared scan with one conditional aggregate per group.
+
+None of the consumer calls changes session state: they register no
+data source and set no conf.
 
 Scale: cursor I/O is O(#groups) driver-side metadata; polls are
 segment-pruned scans; the lag scan is a single linear pass shared by
@@ -31,6 +36,7 @@ all groups.  Nothing here is per-record driver work.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -40,8 +46,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import fresh_scratch_dir, load_table
 from ..registry import query
-from ..sources.lstore_log import (events_as_segment_rows, register,
-                                  segment_stats, write_segments)
+from ..sources.lstore_log import (events_as_segment_rows, plan_segments,
+                                  register, scan_segments, segment_stats,
+                                  write_segments)
 
 CURSOR_DIR = "_cursors"
 _GROUP_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9_.-]{0,63}$")
@@ -164,16 +171,14 @@ def tail_offset(store: str) -> int:
 def poll(spark: SparkSession, store: str, group: str,
          max_records: int | None = None) -> DataFrame:
     """Records past the group's cursor, in segment schema (offset, ints,
-    blobs, key).  Reads through the pushdown reader so fully-consumed
-    sealed segments are pruned at planning time.  ``max_records`` bounds
-    the batch to the LOWEST unconsumed offsets (a TakeOrdered — the
-    broker's max-poll-records): consume, process, then
-    ``commit_offset(store, group, batch max offset)``."""
+    blobs, key).  ``plan_segments`` prunes fully-consumed sealed
+    segments on the driver; ``scan_segments`` reads each remaining one
+    in its own task.  ``max_records`` bounds the batch to the LOWEST
+    unconsumed offsets (a TakeOrdered — the broker's max-poll-records):
+    consume, process, then ``commit_offset(store, group, batch max
+    offset)``."""
     cur = committed_offset(store, group)
-    register(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    raw = (spark.read.format("lstore_log")
-           .option("path", store).option("pushdown", "true").load()
+    raw = (scan_segments(spark, plan_segments(store, lo=cur + 1))
            .filter(F.col("offset") > cur))
     if max_records is not None:
         raw = raw.orderBy("offset").limit(max_records)
@@ -522,15 +527,17 @@ def poll_assigned(spark: SparkSession, store: str, group: str,
                   consumer: int, n_consumers: int | None = None,
                   generation: int | None = None) -> DataFrame:
     """One consumer INSTANCE's poll, restricted to its assigned
-    segments via the reader's ``segments`` option — each of the group's
-    N instances scans a disjoint file subset in its own session.
+    segments (``plan_segments``' ``segments``, which fails loudly on a
+    stale assignment) — each of the group's N instances scans a
+    disjoint file subset in its own session.
 
     Progress is tracked PER SEGMENT (``commit_assigned``), never via
-    the shared scalar group cursor: fully-consumed segments are dropped
-    from the read at planning time (metadata-only — they are not even
-    listed to the reader), a partially-consumed segment reads with its
-    own ``offset >`` pushdown, and untouched segments read whole.  The
-    union's branches cover disjoint files, so no byte is scanned twice.
+    the shared scalar group cursor.  Segments are planned in one group
+    per distinct cursor value, each with that cursor as its
+    ``plan_segments`` lower bound: fully-consumed segments are pruned
+    on the driver, the rest read through ``scan_segments`` filtered
+    ``offset > cursor``.  The union's branches cover disjoint files,
+    so no byte is scanned twice.
 
     Pass ``generation`` (from ``rebalance``) to poll a managed group —
     a stale generation raises immediately, and ``commit_assigned``
@@ -552,57 +559,43 @@ def poll_assigned(spark: SparkSession, store: str, group: str,
     else:
         raise ValueError("poll_assigned: pass generation= (managed) "
                          "or n_consumers= (static)")
-    mine = sorted(s for s, c in assignment.items() if c == consumer)
     seg_cur = committed_segment_offsets(store, group)
-    register(spark)
-    whole, partial = [], []
-    for s in mine:
-        stats = segment_stats(os.path.join(store, s))
-        lo, hi = stats if stats is not None else (None, None)
-        cur = seg_cur.get(s, -1)
-        if hi is not None and cur >= hi:
-            continue  # fully consumed: planning-time prune
-        if cur >= 0:
-            partial.append((s, cur))
-        else:
-            whole.append(s)
-    if not whole and not partial:
-        # nothing to read (unassigned instance, or fully caught up):
-        # an empty relation in the store's schema
-        return (spark.read.format("lstore_log").option("path", store)
-                .load().filter(F.lit(False)))
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-
-    def _read(segs):
-        return (spark.read.format("lstore_log")
-                .option("path", store)
-                .option("segments", ",".join(segs))
-                .option("pushdown", "true").load())
-
-    branches = [_read(whole)] if whole else []
-    # one branch per in-flight segment (there is at most one per
-    # instance in steady-state consumption) so its cursor filter cannot
-    # leak onto sibling segments with different progress
-    branches += [_read([s]).filter(F.col("offset") > c) for s, c in partial]
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
+    # one branch per distinct cursor value (untouched segments share -1;
+    # steady-state consumption has at most one in-flight segment per
+    # instance) so a cursor filter never leaks onto a sibling segment
+    # with different progress
+    by_cursor: dict[int, list[str]] = {}
+    for s, c in assignment.items():
+        if c == consumer:
+            by_cursor.setdefault(seg_cur.get(s, -1), []).append(s)
+    branches = []
+    for cur, segs in sorted(by_cursor.items()):
+        files = plan_segments(store, lo=cur + 1, segments=segs)
+        if files:
+            branches.append(scan_segments(spark, files)
+                            .filter(F.col("offset") > cur))
+    if not branches:
+        # nothing to read (unassigned instance, or fully caught up)
+        return scan_segments(spark, [])
+    return functools.reduce(DataFrame.unionByName, branches)
 
 
 def lag_report(spark: SparkSession, store: str,
                names: list[str] | None = None) -> DataFrame:
     """The broker lag relation: one row per group with its committed
     offset, the store tail, offset-units lag, and the exact unconsumed
-    record count.  One shared scan, one conditional aggregate per group
-    (the 1-row aggregate is unstacked JVM-side — no driver collect)."""
+    record count.  One shared ``scan_segments`` pass over the segments
+    ``plan_segments`` keeps above the LOWEST cursor (a segment at or
+    below every cursor adds nothing to any group's lag), one
+    conditional aggregate per group (the 1-row aggregate is unstacked
+    JVM-side — no driver collect)."""
     names = groups(store) if names is None else names
     if not names:
         raise ValueError(f"lag_report: no consumer groups under {store}")
     cursors = [(g, committed_offset(store, g)) for g in names]
     tail = tail_offset(store)
-    register(spark)
-    raw = (spark.read.format("lstore_log").option("path", store).load())
+    lowest = min(c for _g, c in cursors)
+    raw = scan_segments(spark, plan_segments(store, lo=lowest + 1))
     one = raw.agg(*[
         F.sum((F.col("offset") > F.lit(c)).cast("long")).alias(f"_lag_{i}")
         for i, (_g, c) in enumerate(cursors)])
@@ -813,7 +806,6 @@ def q_stream_consumer_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
               .repartitionByRange(4, "offset")
               .sortWithinPartitions("offset"))
     write_segments(shaped, store)
-    register(spark)
 
     for g in ("alpha", "bravo", "charlie"):
         ensure_group(store, g)
@@ -876,7 +868,6 @@ def q_stream_consumer_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (O(#segments) trailer seeks, no data scan); per-segment cursors
     keep commit traffic O(#segments-touched), never O(records)."""
     store = _fixed_width_store(spark, sf_dir, "congrp_rebal")
-    register(spark)
     grp = "workers"
 
     gen1, asg1 = rebalance(store, grp, 3)

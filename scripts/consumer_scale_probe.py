@@ -38,9 +38,9 @@ SF_DIR = os.environ.get("SF100X_DIR", "/tmp/sf100x")
 def main() -> None:
     from lstore_spark.catalog import fresh_scratch_dir, load_table
     from lstore_spark.session import get_spark
-    from lstore_spark.sources.lstore_log import (LstoreLogPushdownReader,
-                                                 events_as_segment_rows,
-                                                 register, write_segments)
+    from lstore_spark.sources.lstore_log import (events_as_segment_rows,
+                                                 plan_segments,
+                                                 write_segments)
     from lstore_spark.streaming import consumers as cg
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else SF_DIR
@@ -58,7 +58,6 @@ def main() -> None:
                    .repartitionByRange(n_seg, "offset")
                    .sortWithinPartitions("offset"), store)
     write_sec = round(time.time() - t0, 1)
-    register(spark)
 
     tail = cg.tail_offset(store)
     for g in ("cold", "mid", "hot"):
@@ -75,13 +74,10 @@ def main() -> None:
         if s is not None)[-1][0]
     cg.commit_offset(store, "hot", int(last_lo))
 
-    # plan-time pruning: partitions the pushdown reader keeps per cursor
-    from pyspark.sql.datasource import GreaterThan
-    planning = {}
-    for g in ("cold", "mid", "hot"):
-        r = LstoreLogPushdownReader({"path": store})
-        r.pushFilters([GreaterThan(("offset",), cg.committed_offset(store, g))])
-        planning[g] = len(r.partitions())
+    # plan-time pruning: segments poll's planning step keeps per cursor
+    planning = {g: len(plan_segments(store,
+                                     lo=cg.committed_offset(store, g) + 1))
+                for g in ("cold", "mid", "hot")}
 
     t0 = time.time()
     hot_rows = cg.poll(spark, store, "hot").count()

@@ -10,8 +10,10 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from lstore_spark.sources.lstore_log import write_segment
+from lstore_spark.sources.lstore_log import (SCHEMA_DDL, plan_segments,
+                                             write_segment)
 from lstore_spark.streaming import consumers as cg
 
 
@@ -83,16 +85,100 @@ def test_crashed_commit_leaves_cursor_intact_and_resumes(store, spark):
 def test_caught_up_consumer_prunes_sealed_segments(store):
     """A consumer at offset 299 must plan a read of ONE segment file
     (the tail), not four — the whole point of cursors over sealed
-    trailer stats."""
-    from pyspark.sql.datasource import GreaterThan
-
-    from lstore_spark.sources.lstore_log import LstoreLogPushdownReader
-
+    trailer stats.  ``plan_segments`` is the planning step ``poll``
+    runs."""
     cg.ensure_group(store, "g3")
     cg.commit_offset(store, "g3", 299)
-    r = LstoreLogPushdownReader({"path": store})
-    r.pushFilters([GreaterThan(("offset",), cg.committed_offset(store, "g3"))])
-    assert len(r.partitions()) == 1, "caught-up poll must touch only the tail"
+    cur = cg.committed_offset(store, "g3")
+    assert plan_segments(store, lo=cur + 1) == \
+        [os.path.join(store, "00003.seg")], \
+        "caught-up poll must touch only the tail"
+
+
+def test_caught_up_poll_plans_one_task_per_unconsumed_segment(store, spark):
+    """``poll`` schedules exactly one task per segment that still holds
+    unconsumed offsets, down to none for a fully consumed store, and
+    its only Python stage is the scan itself: no Python DataSource."""
+    cg.ensure_group(store, "gt")
+    for cursor, tasks in ((-1, 4), (150, 3), (299, 1), (399, 0)):
+        if cursor >= 0:
+            cg.commit_offset(store, "gt", cursor)
+        df = cg.poll(spark, store, "gt")
+        assert df.rdd.getNumPartitions() == tasks, cursor
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BatchScan" not in plan, plan
+        assert plan.count("MapInArrow") == (1 if tasks else 0), plan
+        assert sorted(r.offset for r in df.select("offset").collect()) \
+            == list(range(cursor + 1, 400)), cursor
+
+
+def test_empty_polls_return_segment_schema(store, spark, tmp_path):
+    """An empty store, a fully consumed store and an instance that owns
+    no segment each poll as an empty frame in the segment schema."""
+    schema = StructType.fromDDL(SCHEMA_DDL)
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    cg.ensure_group(str(empty), "ge")
+    cg.ensure_group(store, "ge")
+    cg.commit_offset(store, "ge", 399)
+    gen, asg = cg.rebalance(store, "gs", 5)  # 4 segments: instance 4 idles
+    assert 4 not in asg.values()
+    frames = {"empty store": cg.poll(spark, str(empty), "ge"),
+              "consumed store": cg.poll(spark, store, "ge"),
+              "segment-less instance":
+                  cg.poll_assigned(spark, store, "gs", 4, generation=gen)}
+    for what, df in frames.items():
+        assert df.schema == schema, what
+        assert df.collect() == [], what
+
+
+def test_trailerless_segment_is_still_polled(store, spark):
+    """An unsealed (trailer-less) segment has no range to prune on, so
+    every cursor must still scan it — pruning it would drop rows."""
+    from lstore_spark.sources.lstore_log import _TRAILER_LEN, segment_stats
+
+    tail = os.path.join(store, "00003.seg")
+    with open(tail, "r+b") as fh:
+        fh.truncate(os.path.getsize(tail) - _TRAILER_LEN)
+    assert segment_stats(tail) is None
+    cg.ensure_group(store, "gu")
+    cg.commit_offset(store, "gu", 349)
+    assert plan_segments(store, lo=350) == [tail]
+    got = sorted(r.offset for r in
+                 cg.poll(spark, store, "gu").select("offset").collect())
+    assert got == list(range(350, 400))
+    cg.commit_offset(store, "gu", 399)
+    assert plan_segments(store, lo=400) == [tail]  # still no proof
+    assert cg.poll(spark, store, "gu").count() == 0
+
+
+def test_stale_assignment_poll_fails_loudly(store, spark):
+    """A segment assigned in the current generation but gone from disk
+    (compacted or purged since the rebalance) must raise, never poll as
+    a silently smaller slice."""
+    gen, _ = cg.rebalance(store, "gv", 2)
+    os.remove(os.path.join(store, "00002.seg"))  # owned by instance 0
+    with pytest.raises(FileNotFoundError, match="00002.seg"):
+        cg.poll_assigned(spark, store, "gv", 0, generation=gen)
+    with pytest.raises(FileNotFoundError, match="gone.seg"):
+        plan_segments(store, segments=["gone.seg"])
+
+
+def test_consumers_leave_session_conf_unchanged(store, spark):
+    """Polls and lag reports must not flip session confs: the Python
+    DataSource filter-pushdown switch stays what the caller set."""
+    key = "spark.sql.python.filterPushdown.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        cg.ensure_group(store, "gw")
+        cg.poll(spark, store, "gw", max_records=10).collect()
+        gen, _ = cg.rebalance(store, "gw", 2)
+        cg.poll_assigned(spark, store, "gw", 0, generation=gen).collect()
+        cg.lag_report(spark, store).collect()
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_lag_report_matches_recount(store, spark):

@@ -6,8 +6,10 @@ appends exactly once across ≥3 micro-batches."""
 from __future__ import annotations
 
 import os
+import struct
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -1362,3 +1364,79 @@ def test_stream_commit_crash_fuzz_replay_exactly_once(tmp_path, monkeypatch):
         commit_batch7(d, [[70, 71], [72]])
         assert all_offsets(d) == [60] + B7, \
             f"crash@{k}: replay not exactly-once ({all_offsets(d)})"
+
+
+def test_scan_segments_matches_datasource_row_for_row(spark, tmp_path):
+    """The consumers' scan path (``plan_segments`` + ``scan_segments``)
+    must return what ``spark.read.format("lstore_log")`` returns, in the
+    same order and schema — including a non-UTF-8 blobs[0] (key None),
+    a zero-blob record, an empty ints list and a trailer-less segment."""
+    from lstore_spark.sources.lstore_log import (_TRAILER_LEN, plan_segments,
+                                                 register, scan_segments,
+                                                 write_segment)
+
+    seg = tmp_path / "segs"
+    seg.mkdir()
+    write_segment(str(seg / "a.seg"),
+                  [(o, [o, -o], [f"k{o % 2}".encode(), b"\x00\x01"])
+                   for o in range(50)])
+    write_segment(str(seg / "b.seg"), [(50, [1], [b"\xff\xfe", b"x"]),
+                                       (51, [], []),
+                                       (52, [2, 3], [b""])])
+    write_segment(str(seg / "c.seg"), [(60, [6], [b"\xc3\xa9t\xc3\xa9"])])
+    c = seg / "c.seg"
+    with open(c, "r+b") as fh:
+        fh.truncate(os.path.getsize(c) - _TRAILER_LEN)
+    register(spark)
+    want = spark.read.format("lstore_log").option("path", str(seg)).load()
+    got = scan_segments(spark, plan_segments(str(seg)))
+    assert got.schema == want.schema
+    rows = got.collect()
+    assert rows == want.collect()
+    by_off = {r.offset: r for r in rows}
+    assert len(rows) == 54
+    assert by_off[50].key is None and by_off[50].blobs == [b"\xff\xfe", b"x"]
+    assert by_off[51].ints == [] and by_off[51].blobs == [] \
+        and by_off[51].key is None
+    assert by_off[52].key == "" and by_off[60].key == "été"
+    assert got.rdd.getNumPartitions() == 3, "one task per segment file"
+
+
+def _corrupt_segment(path, case: str) -> None:
+    big = 2 ** 31 - 1
+    with open(path, "wb") as f:
+        if case == "n_ints":  # 16 GiB of ints claimed by a 76-byte file
+            f.write(struct.pack("<qi", 0, big) + b"\0" * 64)
+        else:  # a 2 GiB blob claimed inside a 35-byte file
+            f.write(struct.pack("<qi", 0, 1) + struct.pack("<q", 7)
+                    + struct.pack("<ii", 1, big) + b"abc")
+
+
+@pytest.mark.parametrize("case", ["n_ints", "blob_len"])
+def test_corrupt_length_fails_as_torn_not_memory_error(tmp_path, case):
+    """A corrupt int count or blob length must raise struct.error("torn
+    segment ...") before the read it would size.  Checked in a child
+    capped at a 1 GiB address space, where attempting the multi-GiB
+    read raises MemoryError instead."""
+    import subprocess
+    import sys
+    import textwrap
+
+    p = tmp_path / f"{case}.seg"
+    _corrupt_segment(p, case)
+    child = textwrap.dedent("""
+        import resource, struct, sys
+        from lstore_spark.sources.lstore_log import read_segment_file
+        resource.setrlimit(resource.RLIMIT_AS, (1 << 30, 1 << 30))
+        try:
+            list(read_segment_file(sys.argv[1]))
+        except struct.error as e:
+            assert "torn segment" in str(e), e
+        else:
+            raise AssertionError("corrupt segment parsed")
+        """)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run([sys.executable, "-c", child, str(p)],
+                       env=dict(os.environ, PYTHONPATH=repo),
+                       capture_output=True, text=True, timeout=120)
+    assert r.returncode == 0, r.stderr
