@@ -474,26 +474,28 @@ def fits_broadcast(sf_dir: str, table: str, row_factor: float = 1.0,
 SPREAD_ROWS_PER_TASK = 16_384
 
 
-def spread_rows(df, sf_dir: str, table: str = "documents",
-                rows_per_task: int = SPREAD_ROWS_PER_TASK):
-    """Row-count-based repartition ahead of a CPU-heavy per-row stage
-    (guide §2: derive partitioning from input size, not from the scan's
-    byte-based splits).  Parquet scans split by COMPRESSED bytes, and
-    highly templated text compresses so hard that the compute-heavy
-    projections downstream under-parallelize: the 100× fixture's
-    documents.parquet is 4.5 MB on disk but ~200 MB of text → a 2-split
-    scan on a 32-core host, so every interpreted-HOF token stage ran
-    2-wide (measured r14 session 2: fingerprint 41.6 → 5.4 s,
-    repetition 33.7 → 3.1 s, substring span-runs 66.5 → 7.8 s at the
-    100× fixture from this one change).  The target task count comes
-    from footer ROW stats (no pre-scan): rows / rows_per_task, capped
-    at 4× cluster parallelism; below 4 tasks — every local-SF fixture —
-    this is a no-op, so bench-scale plans are byte-identical.  Never
-    REDUCES parallelism: if the scan already splits at least as wide,
-    the frame passes through untouched."""
-    spark = df.sparkSession
-    n = table_rows(sf_dir, table)
-    target = min((n + rows_per_task - 1) // rows_per_task,
+def spread_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``documents`` scan, repartitioned by ROW count ahead of a
+    CPU-heavy per-row stage (guide §2: derive partitioning from input
+    size, not from the scan's byte-based splits).  Parquet scans split
+    by COMPRESSED bytes, and highly templated text compresses so hard
+    that the compute-heavy projections downstream under-parallelize:
+    the 100× fixture's documents.parquet is 4.5 MB on disk but ~200 MB
+    of text → a 2-split scan on a 32-core host, so every interpreted-HOF
+    token stage ran 2-wide (measured r14 session 2: fingerprint 41.6 →
+    5.4 s, repetition 33.7 → 3.1 s, substring span-runs 66.5 → 7.8 s at
+    the 100× fixture from this one change).  The target task count
+    comes from footer ROW stats (no pre-scan): rows /
+    ``SPREAD_ROWS_PER_TASK``, capped at 4× cluster parallelism; below 4
+    tasks — every local-SF fixture — the bare scan comes back, so
+    bench-scale plans are byte-identical.  Never REDUCES parallelism:
+    if the scan already splits at least as wide, it passes through
+    untouched.  The scan is loaded here, not passed in, because the
+    footer count describes the whole table: a filtered or derived frame
+    would be sized wrong."""
+    df = load_table(spark, sf_dir, "documents")
+    n = table_rows(sf_dir, "documents")
+    target = min((n + SPREAD_ROWS_PER_TASK - 1) // SPREAD_ROWS_PER_TASK,
                  spark.sparkContext.defaultParallelism * 4)
     if target < 4:
         return df

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, spread_rows, table_rows
+from ..catalog import load_table, spread_documents, table_rows
 from ..numerics import DEC, round9_dec, sql_dec2dbl, sql_round9_dec
 from ..registry import query
 from .hashing import sql_md5_long
@@ -76,7 +76,7 @@ GROUP BY t.tok
 )
 def q_llm_text_tokenize_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus term/document frequencies (word-count shape: explode+agg)."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = spread_documents(spark, sf_dir)
     return (
         docs.select("doc_id", F.explode(tokens_col()).alias("term"))
         .groupBy("term")
@@ -121,7 +121,7 @@ def _tfidf_scored(spark: SparkSession, sf_dir: str, bound: int) -> DataFrame:
     scan (pushed filter, plan-asserted), so only the df branch pays
     the full corpus scan — once, through one Exchange.
     """
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = spread_documents(spark, sf_dir)
     df = (
         docs.select(F.explode(F.array_distinct(tokens_col())).alias("term"))
         .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -203,7 +203,7 @@ HAVING COUNT(*) >= 20
 )
 def q_llm_text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram extraction: sequence+transform HOF (no UDF), explode, count."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = spread_documents(spark, sf_dir)
     return (
         docs.select(tokens_col().alias("ts"))
         .select(F.explode(F.expr(_SPARK_BIGRAMS_TS)).alias("bigram"))
@@ -243,7 +243,7 @@ def q_llm_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     English-ish, so the production n-gram-profile model is represented by
     its plumbing: per-language marker scores → argmax).  Pure column ops —
     no UDF, scales as a scan."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = spread_documents(spark, sf_dir)
     en_score = sum(
         (F.size(F.expr(f"filter({_SPARK_TOKENS}, x -> x = '{m}')"))
          for m in _EN_MARKERS),
@@ -282,7 +282,7 @@ FROM feat
 def q_llm_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality score (length + stopword-ratio components), the
     standard pretraining-data filter shape; pure column arithmetic."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = spread_documents(spark, sf_dir)
     stop_list = ", ".join(f"'{s}'" for s in _STOPWORDS)
     n_tok = F.size(tokens_col())
     n_stop = F.size(F.expr(
@@ -320,7 +320,7 @@ FROM documents
 def q_llm_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting three ways: whitespace, regex word-split (the
     BPE-ish pretokenizer), and the chars/4 BPE budget estimate."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = spread_documents(spark, sf_dir)
     return docs.select(
         "doc_id",
         F.size(tokens_col()).alias("ws_tokens"),
@@ -454,7 +454,7 @@ def q_llm_text_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing: regex redaction of emails and digit runs (synthetic
     PII is appended since the fixture corpus has none — the operator is
     the point).  Plain regexp_replace: JVM-side, streams with the scan."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = spread_documents(spark, sf_dir)
     dirty = F.concat(
         F.col("text"), F.lit(" contact: user"), F.col("doc_id").cast("string"),
         F.lit("@example.com code 1234"))
@@ -497,7 +497,7 @@ def q_llm_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sliding chunks with 8-token overlap (stride 24).  Pure HOF pipeline —
     sequence of chunk starts → slice → join; one scan, output rows ∝
     corpus tokens / stride."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = spread_documents(spark, sf_dir)
     # max chunk_id: largest i with 1 + i*stride <= n_tokens, i.e.
     # floor((n-1)/stride) — identical to the oracle's WHERE predicate.
     chunks = F.expr(f"""
@@ -558,26 +558,22 @@ def q_llm_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform evaluates md5 exactly once per shingle.
 
     r14 session 2: the doc scan spreads by ROW count first
-    (catalog.spread_rows — compressed text under-splits the scan, so
+    (catalog.spread_documents — compressed text under-splits the scan, so
     this whole interpreted projection ran 2-wide at the 100× fixture;
     spread it reads 5.4 s vs 41.6 s, scripts/ab_repart_r14.json).  An
     Arrow/mapInArrow port (hashlib md5 over byte-slice shingles) was
     built and parity-verified but REJECTED: with the spread in place
     the HOF form wins 5.4 s vs 9.9 s — the per-span Python md5 call
     overhead loses to interpreted-but-parallel JVM md5
-    (scripts/ab_textproj_arrow_r14.py)."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
-    return _fingerprint_hof(docs)
+    (scripts/ab_textproj_arrow_r14.json).
 
-
-def _fingerprint_hof(docs: DataFrame) -> DataFrame:
-    """The fingerprint projection body (see q_llm_text_fingerprint).
     conv(hex, 16, 10) parses the 12 leading md5 digits in ONE call —
     the hex-digit-sum form (oracle side, hashing.sql_md5_long) costs
     12 substr+instr string ops per shingle.  The token and shingle
     arrays bind as single-element-transform LAMBDA variables — aliased
     projection columns would collapse-inline into every consumer (the
     _SPARK_TOKENS O(tokens²) re-split trap)."""
+    docs = spread_documents(spark, sf_dir)
     one = f"""
       transform(array(({_SPARK_TOKENS})), ts ->
         transform(array(({_SPARK_SHINGLES3_TS})), sh ->
@@ -733,7 +729,7 @@ def q_llm_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: unigram table aggregates small (vocab-sized) and broadcasts;
     the doc-side explode feeds one partial-combinable aggregate."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = spread_documents(spark, sf_dir)
     tok = docs.select("doc_id", F.explode(tokens_col()).alias("term"))
     uni = tok.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
     tot = uni.agg(F.sum("tf").cast("double").alias("n"))
@@ -823,7 +819,7 @@ def q_llm_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-combine map-side and broadcast here (at 100 TB they would
     be Zipf-truncated to top-K or shuffle-joined on the term key — the
     scoring side streams either way)."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = spread_documents(spark, sf_dir)
     toks = docs.select("doc_id", tokens_col().alias("ts"))
     bg = toks.select(
         "doc_id",
@@ -935,21 +931,31 @@ def q_llm_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both arrays bind as single-element-transform lambda variables.
 
     r14 session 2: the doc scan spreads by ROW count first
-    (catalog.spread_rows — compressed text under-splits the scan, so
+    (catalog.spread_documents — compressed text under-splits the scan, so
     this zero-exchange interpreted projection ran 2-wide at the 100×
     fixture; spread it reads 3.1 s vs 33.7 s,
     scripts/ab_repart_r14.json).  An Arrow/mapInArrow stats port was
     built and parity-verified but REJECTED: with the spread in place
     the HOF stats win 3.1 s vs 5.8 s
-    (scripts/ab_textproj_arrow_r14.py)."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
-    return _repetition_from_stats(_repetition_stats_hof(docs))
-
-
-def _repetition_from_stats(r: DataFrame) -> DataFrame:
-    """Final ratios + keep verdict over the per-doc stats frame
-    (doc_id, n_tokens, n_distinct, n_bg, top_bg) — shared by the Arrow
-    and HOF stats generators."""
+    (scripts/ab_textproj_arrow_r14.json)."""
+    docs = spread_documents(spark, sf_dir)
+    run = ("IF(x <=> acc.prev, acc.run + CAST(1 AS BIGINT),"
+           " CAST(1 AS BIGINT))")
+    one = f"""
+      transform(array(({_SPARK_TOKENS})), ts ->
+        transform(array(array_sort(({_SPARK_BIGRAMS_TS}))), sb ->
+          struct(size(ts) AS n_tokens,
+                 size(array_distinct(ts)) AS n_distinct,
+                 size(sb) AS n_bg,
+                 aggregate(sb,
+                   struct(CAST(NULL AS STRING) AS prev,
+                          CAST(0 AS BIGINT) AS run,
+                          CAST(0 AS BIGINT) AS best),
+                   (acc, x) -> struct(x, {run}, greatest(acc.best, {run})),
+                   acc -> acc.best) AS top_bg)))[0][0]"""
+    r = (docs.select("doc_id", F.expr(one).alias("r"))
+         .select("doc_id", "r.n_tokens", "r.n_distinct", "r.n_bg",
+                 "r.top_bg"))
     # try_divide: under Spark 4's ANSI default a plain `/` THROWS
     # DIVIDE_BY_ZERO for an empty (n_tokens=0) or 1-token (n_bg=0)
     # document — exactly the degenerate text a repetition filter
@@ -966,27 +972,6 @@ def _repetition_from_stats(r: DataFrame) -> DataFrame:
         F.round(dr, 6).alias("distinct_ratio"),
         F.round(tbf, 6).alias("top_bigram_frac"),
         ((dr >= 0.3) & (tbf <= 0.2)).cast("bigint").alias("keep"))
-
-
-def _repetition_stats_hof(docs: DataFrame) -> DataFrame:
-    """The per-doc repetition stats body (see q_llm_text_repetition)."""
-    run = ("IF(x <=> acc.prev, acc.run + CAST(1 AS BIGINT),"
-           " CAST(1 AS BIGINT))")
-    one = f"""
-      transform(array(({_SPARK_TOKENS})), ts ->
-        transform(array(array_sort(({_SPARK_BIGRAMS_TS}))), sb ->
-          struct(size(ts) AS n_tokens,
-                 size(array_distinct(ts)) AS n_distinct,
-                 size(sb) AS n_bg,
-                 aggregate(sb,
-                   struct(CAST(NULL AS STRING) AS prev,
-                          CAST(0 AS BIGINT) AS run,
-                          CAST(0 AS BIGINT) AS best),
-                   (acc, x) -> struct(x, {run}, greatest(acc.best, {run})),
-                   acc -> acc.best) AS top_bg)))[0][0]"""
-    return (docs.select("doc_id", F.expr(one).alias("r"))
-            .select("doc_id", "r.n_tokens", "r.n_distinct", "r.n_bg",
-                    "r.top_bg"))
 
 
 @query(
@@ -1177,7 +1162,7 @@ def q_llm_filter_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage table.  Spark cascades at 100 TB run this exact shape with
     ``observed()`` attached so the audit rides the write action for
     free — asserted equal to this relation in tests/test_registry.py."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = spread_documents(spark, sf_dir)
     agg = cascade_flags(docs).agg(
         F.count(F.lit(1)).alias("n0"),
         F.sum(F.col("f1").cast("long")).alias("k1"),
@@ -1226,43 +1211,22 @@ def q_llm_text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_char_entropy_vectorized``): one np.unique over packed
     (doc, code-point) keys per batch replaces the per-char explode +
     two shuffles of the original form (27.9 s → 5.6 s at the 100×
-    fixture; the exploded twin is retained below and pinned
-    bit-identical by ``test_char_entropy_vectorized_matches_exploded``,
-    including empty/null/non-BMP degenerate docs)."""
-    return _char_entropy_vectorized(spread_rows(load_table(spark, sf_dir, "documents"), sf_dir))
-
-
-def _char_entropy_exploded(docs: DataFrame) -> DataFrame:
-    """The original explode+2-agg form of q_llm_text_char_entropy —
-    per-doc-bounded explode, (doc, char) rollup partial-combining to
-    ≤|alphabet| rows per doc before either shuffle.  Kept as the
-    semantics pin for the vectorized path (JVM split/groupBy/round9_dec
-    ground truth)."""
-    chars = (
-        docs.select("doc_id", F.explode(F.split("text", "")).alias("ch"))
-        .groupBy("doc_id", "ch").agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    per_doc = chars.groupBy("doc_id").agg(
-        F.sum("cnt").alias("n"),
-        F.count(F.lit(1)).alias("n_distinct_chars"),
-        F.sum(round9_dec(F.col("cnt") * F.log2("cnt"))).alias("s"),
-    )
-    return per_doc.select(
-        "doc_id", "n_distinct_chars",
-        (F.round(F.log2(F.col("n").cast("double"))
-                 - F.col("s").cast("double") / F.col("n"),
-                 6) + F.lit(0.0)).alias("char_entropy_bits"),
-    )
+    fixture).  The DuckDB oracle above is its reference, on the fixture
+    and on the empty/null/non-BMP/overlong degenerate docs of
+    ``test_char_entropy_vectorized_matches_exploded`` and
+    ``test_char_entropy_vectorized_long_doc_overflow``."""
+    return _char_entropy_vectorized(spread_documents(spark, sf_dir))
 
 
 def _char_entropy_stats_batches(it):
     """mapInPandas worker: (doc_id, text) → (doc_id, n_distinct_chars,
     n, s) with s ≡ the JVM SUM(round9_dec(cnt·log2 cnt)) cast to double.
 
-    Bit-exactness contract (vs _char_entropy_exploded):
-    - F.split(text, '') splits per CODE POINT (probed: '😀' stays one
-      element) → UTF-32-LE units; '' splits to [''] → n=1, distinct=1,
-      s=0; NULL text explodes to no rows → doc dropped.
+    Bit-exactness contract (vs the oracle's per-char explode → (doc,
+    char) count → Σ round9 decimal sum, the JVM ``round9_dec`` grain):
+    - splits per CODE POINT (DuckDB string_split(text, '') keeps '😀'
+      one element) → UTF-32-LE units; '' counts as one empty char →
+      n=1, distinct=1, s=0; NULL text yields no row → doc dropped.
     - Per-unique-(doc,cp) counts via ONE np.unique over packed int64
       keys (doc_idx·2²¹ | cp — code points < 2²¹).
     - The term round9_dec(c·log2 c) is computed ONCE per DISTINCT
@@ -1281,6 +1245,7 @@ def _char_entropy_stats_batches(it):
       ANY length; term-table entries only reachable from such docs are
       parked as 0 in the int64 fast table (a count c can only occur in
       a doc with n ≥ c, and any such doc is already routed).  Pinned by
+      the 600k- and 1M-char docs of
       test_char_entropy_vectorized_long_doc_overflow.
     - int → double division by 10¹² is IEEE-correctly-rounded only
       while the numerator is exact (≤2⁵³); larger sums take the exact
@@ -1364,8 +1329,7 @@ def _char_entropy_stats_batches(it):
 def _char_entropy_vectorized(docs: DataFrame) -> DataFrame:
     """Zero-Exchange char-entropy: the per-doc (n, distinct, Σ round9)
     stats come out of one Arrow batch pass; log2/division/final ROUND
-    stay JVM-side so the last-mile arithmetic is the exploded twin's
-    own expressions."""
+    stay JVM-side, the same last-mile expressions as the oracle's."""
     stats = docs.select("doc_id", "text").mapInPandas(
         _char_entropy_stats_batches,
         schema="doc_id long, n_distinct_chars long, n long, s double",

@@ -12,8 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, spread_rows
+from ..catalog import load_table, spread_documents
 from ..llm.hashing import sql_md5_long
+from ..llm.text import _DUCK_TOKENS, _SPARK_TOKENS
 from ..numerics import (DEC, davg, dsum, dsum9, sql_davg, sql_dec2dbl,
                         sql_dsum, sql_dsum9)
 from ..registry import query
@@ -463,10 +464,9 @@ def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_heavy_hitters",
-    oracle="""
+    oracle=f"""
 WITH tok AS (
-  SELECT unnest(list_filter(string_split(text, ' '), x -> x <> ''))
-           AS token
+  SELECT unnest({_DUCK_TOKENS}) AS token
   FROM documents
 ),
 cnt AS (
@@ -494,15 +494,12 @@ def q_agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary size."""
     from ..registry import pin
 
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = spread_documents(spark, sf_dir)
     # pin: cnt feeds BOTH the grand total and the final projection —
     # unpinned, Spark re-runs the scan+explode+shuffle once per branch
     # (no CSE across branches; the global_row_number lesson; review r13)
     cnt = pin(
-        docs.select(F.explode(
-            # codegen'd twin of filter(split(...), x -> x <> '') — the
-            # _SPARK_TOKENS swap (r14 session 2), same literal here
-            F.expr("array_remove(split(text, ' '), '')")).alias("token"))
+        docs.select(F.explode(F.expr(_SPARK_TOKENS)).alias("token"))
         .groupBy("token").agg(F.count(F.lit(1)).alias("n_occurrences"))
     )
     tot = cnt.agg(F.sum("n_occurrences").alias("t"))

@@ -1,8 +1,12 @@
-"""Dump `.explain("formatted")` for the given keys into plans/r14/.
+r"""Dump `.explain("formatted")` for the given keys.
 
-Usage: python scripts/dump_plans_r14.py <suffix> key [key ...]
-Writes plans/r14/<key>_<suffix>.txt (suffix = "before" | "after").
-The judge checks plan claims in OPTIMIZATION_r14.md against these files.
+Usage: [PLANS_OUT=dir] [SPARK_GRAFT_SF_DIR=sf_dir] \
+       python scripts/dump_plans.py <suffix> key [key ...]
+Writes <PLANS_OUT>/<key>_<suffix>.txt (default PLANS_OUT: plans/;
+suffix e.g. "before" | "after").  Dumping the same keys from two
+checkouts and diffing the files (after normalizing expression ids
+`#\d+`, `[\d+]` and object hashes `@[0-9a-f]+`) shows whether a change
+moved any plan.
 """
 
 from __future__ import annotations
@@ -18,7 +22,7 @@ from lstore_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT_DIR = os.environ.get(
     "PLANS_OUT", os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r14"))
+        os.path.abspath(__file__))), "plans"))
 
 
 def main() -> None:
@@ -26,7 +30,7 @@ def main() -> None:
     keys = sys.argv[2:]
     load_all()
     os.makedirs(OUT_DIR, exist_ok=True)
-    spark = get_spark("dump-plans-r14")
+    spark = get_spark("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     for key in keys:
         df = QUERIES[key](spark, SF_DIR)

@@ -84,7 +84,7 @@ PROBES: list[tuple[str, str, tuple[str, ...], int]] = [
     ("q_llm_dedup_minhash", DIR_100X, ("std",), 2),
     ("q_llm_dedup_substring", DIR_100X, ("std",), 2),
     ("q_win_time_range", DIR_100X, ("std",), 2),
-    # r14 session 2: the token-family keys the spread_rows/HOF work
+    # r14 session 2: the token-family keys the row-count spread/HOF work
     # moved (scripts/ab_repart_r14.json, spread_sweep_r14.json) — on
     # the ledger so the next round's claims compare against re-runnable
     # numbers, not one-off probes.

@@ -270,18 +270,19 @@ def test_table_cache_purges_stopped_sessions():
 
 
 def test_spread_rows_is_row_count_gated(spark, sf_dir, monkeypatch):
-    """spread_rows (r14 session 2): a row-count-derived repartition for
-    CPU-bound per-row stages over under-split compressed-text scans.
-    Below the 4-task threshold — every local fixture — it must return
-    the SAME frame (bench plans byte-identical); above it, the task
-    count derives from footer row stats capped at 4× parallelism."""
+    """spread_documents (r14 session 2): a row-count-derived repartition
+    of the documents scan for CPU-bound per-row stages over under-split
+    compressed-text scans.  Below the 4-task threshold — every local
+    fixture — it must return the bare cached scan (bench plans
+    byte-identical); above it, the task count derives from footer row
+    stats capped at 4× parallelism."""
     from lstore_spark import catalog
 
     docs = catalog.load_table(spark, sf_dir, "documents")
-    assert catalog.spread_rows(docs, sf_dir) is docs  # fixture: no-op
+    assert catalog.spread_documents(spark, sf_dir) is docs  # fixture: no-op
 
     monkeypatch.setattr(catalog, "table_rows", lambda s, t: 500_000)
-    out = catalog.spread_rows(docs, sf_dir)
+    out = catalog.spread_documents(spark, sf_dir)
     assert out is not docs
     expect = min(
         (500_000 + catalog.SPREAD_ROWS_PER_TASK - 1)
@@ -292,4 +293,5 @@ def test_spread_rows_is_row_count_gated(spark, sf_dir, monkeypatch):
     # never REDUCES parallelism: if the scan already splits wider,
     # pass through untouched
     wide = docs.repartition(expect + 7)
-    assert catalog.spread_rows(wide, sf_dir) is wide
+    monkeypatch.setattr(catalog, "load_table", lambda s, d, n: wide)
+    assert catalog.spread_documents(spark, sf_dir) is wide

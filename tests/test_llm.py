@@ -674,7 +674,7 @@ def test_substring_dedup_span_runs_equal_two_exchange(spark, sf_dir):
     assert any(r[2] > r[1] for r in pa), "planted in-doc repeats missing"
 
     # the multibyte/multi-space planted docs above also pin the
-    # spread_rows-era path (spread is a row-count no-op at fixture
+    # spread_documents path (spread is a row-count no-op at fixture
     # scale, so the plan-shape assert below still sees ONE exchange)
 
     # fresh (unexecuted) frame: a collected AQE frame's plan string
@@ -1176,62 +1176,94 @@ def test_spark_murmur3_parity_with_jvm_hash(spark):
                           np.where(J % 2 == 0, 1.0, -1.0))
 
 
-def test_minhash_signatures_vectorized_matches_hof(spark, sf_dir):
-    """The Arrow-vectorized signature builder (numpy murmur3 shingle
-    hashes + per-permutation minima) must be BIT-IDENTICAL to the
-    interpreted HOF twin it replaced — over the real fixture corpus AND
-    the degenerate 0/1/2-token + null-text docs (whose zero-padded
-    single shingle, and Spark greatest()'s null-skipping, are the edge
-    semantics the numpy path re-implements)."""
-    from lstore_spark.catalog import load_table
-    from lstore_spark.llm.dedup import (_minhash_signatures_hof,
-                                        minhash_signatures)
+def _documents_fixture(tmp_path, base: list[tuple[int, str | None]],
+                       extra: list[tuple[int, str | None]]):
+    """(fixture dir, DuckDB connection) over a one-file documents table
+    of ``base`` + ``extra`` (doc_id, text) rows."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    edge = spark.createDataFrame(
-        [(1, "single"), (2, "two tokens"), (3, " "), (4, "a b c d"),
-         (5, None), (6, "")],
-        ["doc_id", "text"])
-    docs = load_table(spark, sf_dir, "documents").limit(200) \
-        .select("doc_id", "text").unionByName(edge)
-    vec = minhash_signatures(docs)
-    hof = _minhash_signatures_hof(docs)
-    assert vec.exceptAll(hof).count() == 0
-    assert hof.exceptAll(vec).count() == 0
+    rows = base + extra
+    fx = tmp_path / "fx"
+    fx.mkdir()
+    pq.write_table(pa.table({
+        "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+        "text": pa.array([r[1] for r in rows], pa.string()),
+        "lang": ["en"] * len(rows),
+        "source": ["src1"] * len(rows),
+        "n_chars": pa.array([len(r[1] or "") for r in rows], pa.int64()),
+    }), str(fx / "documents.parquet"))
+    duck = duckdb.connect()
+    duck.execute(f"CREATE VIEW documents AS SELECT * "
+                 f"FROM '{fx}/documents.parquet'")
+    return str(fx), duck
 
 
-def test_minhash_with_buckets_matches_hof_banding(spark, sf_dir):
-    """with_buckets=True (r14) must emit the EXACT signed band-bucket
-    ints the interpreted hash(slice(mhs, bnd*r+1, r)) HOF produces
-    (array-hash fold law), and lsh_candidate_pairs over the bucketed
-    signature frame must return the identical pair set it returns over
-    the plain one — including the degenerate 0/1/2-token + null-text
-    docs whose zero-padded shingles stress the fold inputs."""
-    from pyspark.sql import functions as F
+def _fixture_docs(sf_dir: str, n: int | None = None):
+    import pyarrow.parquet as pq
 
-    from lstore_spark.catalog import load_table
-    from lstore_spark.llm.dedup import (_BANDS, _MINHASH_R,
-                                        lsh_candidate_pairs,
-                                        minhash_signatures)
+    t = pq.read_table(f"{sf_dir}/documents.parquet",
+                      columns=["doc_id", "text"]).sort_by("doc_id")
+    rows = list(zip(t.column("doc_id").to_pylist(),
+                    t.column("text").to_pylist()))
+    return rows if n is None else rows[:n]
 
-    edge = spark.createDataFrame(
-        [(900001, "single"), (900002, "two tokens"), (900003, " "),
-         (900004, "a b c d"), (900005, None), (900006, "")],
-        ["doc_id", "text"])
-    docs = load_table(spark, sf_dir, "documents").limit(200) \
-        .select("doc_id", "text").unionByName(edge)
-    r, b = _MINHASH_R, _BANDS
-    wb = minhash_signatures(docs, with_buckets=True)
-    ref = minhash_signatures(docs).select(
-        "doc_id", "mhs",
-        F.expr(f"transform(sequence(0, {b - 1}), "
-               f"bnd -> hash(slice(mhs, bnd * {r} + 1, {r})))")
-        .alias("bkts"))
-    assert wb.exceptAll(ref).count() == 0
-    assert ref.exceptAll(wb).count() == 0
-    p_wb = lsh_candidate_pairs(wb.localCheckpoint())
-    p_ref = lsh_candidate_pairs(minhash_signatures(docs).localCheckpoint())
-    assert p_wb.exceptAll(p_ref).count() == 0
-    assert p_ref.exceptAll(p_wb).count() == 0
+
+def _minhash_corpus(sf_dir, tmp_path):
+    """(fixture dir, DuckDB connection, planted doc ids) over 200 fixture
+    docs, the degenerate 0/1/2-token + blank + NULL-text docs (whose
+    zero-padded single shingle is the edge the numpy path
+    re-implements), and one planted near-duplicate of each of the first
+    six docs so candidate pairs exist."""
+    base = _fixture_docs(sf_dir, 200)
+    edge = [(900001, "single"), (900002, "two tokens"), (900003, " "),
+            (900004, "a b c d"), (900005, None), (900006, "")]
+    planted = []
+    for doc_id, text in base[:6]:
+        words = text.split()
+        words[len(words) // 2] = "PLANTEDEDIT"
+        planted.append((910_000 + doc_id, " ".join(words)))
+    fx, duck = _documents_fixture(tmp_path, base, edge + planted)
+    return fx, duck, {p for p, _ in planted}
+
+
+def test_minhash_signatures_vectorized_matches_hof(spark, sf_dir, tmp_path):
+    """The Arrow-vectorized signature builder's per-doc ``mhs`` and
+    ``bkts`` must equal the hash-grade DuckDB oracle's ``mhs``/``bkts``
+    CTEs, doc for doc, over the _minhash_corpus docs."""
+    from lstore_spark.llm.dedup import _BANDS, _minhash_oracle
+
+    fx, duck, planted = _minhash_corpus(sf_dir, tmp_path)
+    sql = _minhash_oracle()
+    sql = (sql[:sql.rindex("SELECT d.doc_id")]
+           + "SELECT doc_id, mhs, bkts FROM mhs JOIN bkts USING (doc_id)")
+    want = {r[0]: (list(r[1]), list(r[2]))
+            for r in duck.execute(sql).fetchall()}
+    got = {r.doc_id: (list(r.mhs), list(r.bkts)) for r in
+           minhash_signatures(load_table(spark, fx, "documents")).collect()}
+    assert len(got) == 200 + 6 + len(planted)
+    assert all(len(b) == _BANDS for _, b in got.values())
+    bad = [d for d in got if got[d] != want.get(d)]
+    assert not bad and set(got) == set(want), bad[:5]
+
+
+def test_minhash_with_buckets_matches_hof_banding(spark, sf_dir, tmp_path):
+    """The banding stage over the signature frame's ``bkts`` (hot-bucket
+    cap, first-band dedup, mate rollup) must hash-match the DuckDB
+    oracle for the whole q_llm_dedup_minhash pipeline over the
+    _minhash_corpus docs, and every planted near-duplicate must find
+    its mate."""
+    from lstore_spark.registry import ORACLE
+    from tests.oracle_check import compare
+
+    fx, duck, planted = _minhash_corpus(sf_dir, tmp_path)
+    key = "q_llm_dedup_minhash"
+    out = QUERIES[key](spark, fx)
+    res = compare(key, out, duck, ORACLE[key])
+    assert res.ok, res.detail
+    mated = {r.doc_id for r in out.filter(F.col("n_mates") > 0).collect()}
+    assert planted <= mated
 
 
 def test_hyperplane_band_rows_plan_construction_runs_no_job(spark):
@@ -1292,65 +1324,63 @@ def test_pq_codebook_persisted_roundtrip_bit_exact(spark, sf_dir):
     assert c_first.dtype == np.float64 and c_first.shape[1] == 64
 
 
-def test_semantic_pairwise_vectorized_bit_identical(spark, sf_dir):
-    """The applyInPandas Gram pairwise (the hierarchical/scale path's
-    r9 stage) must reproduce the salted-join + HOF-cosine dup set
-    EXACTLY on the same pairs_src: the Gram accumulates per-dim outer
-    products in the HOF fold order, reuses the JVM norms, and guards
-    the ROUND-6 threshold with exact decimals at the boundary."""
-    from pyspark.sql import Window
+def test_semantic_oracle_fixture_has_near_twins(duck):
+    """test_oracle_parity[q_llm_dedup_semantic] certifies the Gram
+    keep-flag pass against the oracle; that only tests the near-twin
+    threshold if the fixture has near-twins — the oracle must drop
+    some vectors (keep = false)."""
+    from lstore_spark.registry import ORACLE
 
-    from lstore_spark.llm.dedup import (_TAU_EMB_NEAR_DUP, _dup_ids_joined,
-                                        _dup_ids_vectorized)
-    from lstore_spark.llm.embeddings import assign_nearest
-    from lstore_spark.llm.similarity import _norm
-
-    em = load_table(spark, sf_dir, "embeddings")
-    w = Window.orderBy("vec_id")
-    k = 8
-    cvecs = (em.orderBy("vec_id").limit(k)
-             .select((F.row_number().over(w) - 1).alias("ck"),
-                     F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-                     .alias("cvec")))
-    asg = assign_nearest(em, cvecs, "ck").select("vec_id", "cluster")
-    v = (em.join(asg, "vec_id")
-         .select("vec_id", "cluster", "embedding",
-                 _norm("embedding").alias("_n"))
-         .localCheckpoint())
-    joined = {r.vec_id for r in
-              _dup_ids_joined(v, _TAU_EMB_NEAR_DUP, k).collect()}
-    vec = {r.vec_id for r in
-           _dup_ids_vectorized(v, _TAU_EMB_NEAR_DUP).collect()}
-    assert joined == vec
-    assert joined, "fixture should contain near-twin pairs at this tau"
+    n_dropped = duck.execute(
+        f"SELECT count(*) FROM ({ORACLE['q_llm_dedup_semantic']}) "
+        f"WHERE NOT keep").fetchone()[0]
+    assert n_dropped > 0, "fixture should contain near-twin pairs at this tau"
 
 
-def test_char_entropy_vectorized_matches_exploded(spark, sf_dir):
+def _char_entropy_vs_oracle(spark, tmp_path, base, edge):
+    """q_llm_text_char_entropy over ``base`` + ``edge`` docs, checked by
+    compare() against the DuckDB oracle; returns the edge docs'
+    {doc_id: (n_distinct_chars, char_entropy_bits)}."""
+    from lstore_spark.registry import ORACLE
+    from tests.oracle_check import compare
+
+    fx, duck = _documents_fixture(tmp_path, base, edge)
+    key = "q_llm_text_char_entropy"
+    out = QUERIES[key](spark, fx)
+    res = compare(key, out, duck, ORACLE[key])
+    assert res.ok, res.detail
+    ids = [d for d, _ in edge]
+    return {r.doc_id: (r.n_distinct_chars, r.char_entropy_bits) for r in
+            out.filter(F.col("doc_id").isin(ids)).collect()}
+
+
+def test_char_entropy_vectorized_matches_exploded(spark, sf_dir, tmp_path):
     """The zero-Exchange Arrow char-entropy path (one np.unique over
     packed (doc, code-point) keys + exact-decimal round9 term table)
-    must be BIT-IDENTICAL to the explode+2-agg JVM twin it replaced —
-    over the real corpus AND the degenerate docs that pin the split
-    semantics: '' → [''] (n=1, H=0), NULL text → doc dropped, non-BMP
-    chars as single code points, a single-char run, and a 90-symbol
-    near-uniform alphabet."""
-    from lstore_spark.llm.text import (_char_entropy_exploded,
-                                       _char_entropy_vectorized)
+    must hash-match the DuckDB oracle over the fixture docs AND the
+    degenerate docs that pin the split semantics: '' (n=1, H=0), NULL
+    text (doc dropped), non-BMP chars as single code points, a
+    single-char run, and a 90-symbol near-uniform alphabet."""
+    edge = [(100001, ""), (100002, "a"), (100003, "a\U0001F600\U0001F600b"),
+            (100004, None), (100005, "ab ba"), (100006, "x" * 5000),
+            (100007, "".join(chr(33 + i % 90) for i in range(4000)))]
+    got = _char_entropy_vs_oracle(spark, tmp_path, _fixture_docs(sf_dir),
+                                  edge)
+    assert 100004 not in got and got[100001][1] == 0.0
 
-    edge = spark.createDataFrame(
-        [(100001, ""), (100002, "a"), (100003, "a\U0001F600\U0001F600b"),
-         (100004, None), (100005, "ab ba"), (100006, "x" * 5000),
-         (100007, "".join(chr(33 + i % 90) for i in range(4000)))],
-        "doc_id long, text string")
-    docs = (load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text").unionByName(edge))
-    vec = _char_entropy_vectorized(docs)
-    exp = _char_entropy_exploded(docs)
-    assert vec.exceptAll(exp).count() == 0
-    assert exp.exceptAll(vec).count() == 0
-    # NULL-text doc dropped, empty-text doc present with H = 0
-    got = {r.doc_id: r.char_entropy_bits for r in
-           vec.filter(F.col("doc_id") > 100000).collect()}
-    assert 100004 not in got and got[100001] == 0.0
+
+def test_char_entropy_vectorized_long_doc_overflow(spark, tmp_path):
+    """The 1e-12-scaled int64 fast path wraps past n·log2(n)·1e12 ≥ 2⁶²
+    (~2.4e5 code points) — exactly the long single-char-spam inputs the
+    detector exists to flag.  Such docs must route through the exact
+    Python-int slow path and hash-match the DuckDB oracle: a 600k
+    single-char doc (its term alone overflows int64) must score H=0,
+    and a 1M-char 4-symbol doc H=2."""
+    edge = [(1, "x" * 600_000), (2, "abcd" * 250_000),
+            (3, "short normal doc")]
+    got = _char_entropy_vs_oracle(spark, tmp_path, [], edge)
+    assert got[1] == (1, 0.0)
+    assert got[2] == (4, 2.0)
 
 
 def test_char_entropy_plan_has_no_exchange(spark, sf_dir):
@@ -1359,30 +1389,6 @@ def test_char_entropy_plan_has_no_exchange(spark, sf_dir):
     p = (QUERIES["q_llm_text_char_entropy"](spark, sf_dir)
          ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in p, p
-
-
-def test_char_entropy_vectorized_long_doc_overflow(spark):
-    """Round-9 self-review finding: the 1e-12-scaled int64 fast path
-    wraps past n·log2(n)·1e12 ≥ 2⁶² (~2.4e5 code points) — exactly the
-    long single-char-spam inputs the detector exists to flag.  Such
-    docs must route through the exact Python-int slow path and match
-    the decimal(30,12) JVM twin: a 600k single-char doc (term itself
-    overflows int64) must score H=0, and a 1M-char 4-symbol doc H=2."""
-    from lstore_spark.llm.text import (_char_entropy_exploded,
-                                       _char_entropy_vectorized)
-
-    docs = spark.createDataFrame(
-        [(1, "x" * 600_000),
-         (2, "abcd" * 250_000),
-         (3, "short normal doc")],
-        "doc_id long, text string").repartition(1)
-    vec = {r.doc_id: (r.n_distinct_chars, r.char_entropy_bits)
-           for r in _char_entropy_vectorized(docs).collect()}
-    exp = {r.doc_id: (r.n_distinct_chars, r.char_entropy_bits)
-           for r in _char_entropy_exploded(docs).collect()}
-    assert vec == exp
-    assert vec[1] == (1, 0.0)
-    assert vec[2] == (4, 2.0)
 
 
 def test_bpe_vocab_fixture_parity_memo_and_invalidation(spark, sf_dir,
